@@ -54,6 +54,7 @@ from __future__ import annotations
 import os
 import re
 
+from physicsnemo_curator_spark.core import session_cache
 from physicsnemo_curator_spark.core.errors import analysis_condition
 
 __all__ = [
@@ -150,68 +151,23 @@ def read_optional_parquet(spark, path: str):
         raise
 
 
-def _tree_ident(root: str) -> str:
-    """Recursive freshness token for a store directory: every file's
-    (relative path, mtime_ns, size) folded into one md5.  Unlike the
-    table memo's direct-children token, store partitions mutate BELOW
-    the top level (dynamic partition overwrite rewrites files inside an
-    existing ``_batch=<id>/cell=<n>/`` dir without touching the root's
-    entry set), so the token must walk the whole tree.  Driver-side
-    stat work, O(files) — for the local stores this serves, far cheaper
-    than the Spark footer-inference job it replaces."""
-    import hashlib
-
-    parts: list[str] = []
-    try:
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames.sort()
-            rel = os.path.relpath(dirpath, root)
-            for fn in sorted(filenames):
-                try:
-                    st = os.stat(os.path.join(dirpath, fn))
-                    parts.append(f"{rel}/{fn}:{st.st_mtime_ns}:{st.st_size}")
-                except OSError:
-                    parts.append(f"{rel}/{fn}:gone")
-    except OSError:
-        return "unreadable"
-    if not parts:
-        return "empty"
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
-def memoized_read(spark, key_path: str, local_root: str, build):
-    """Session plan memo for store reads, keyed on ``key_path`` plus
-    the recursive content identity of ``local_root``
-    (:func:`_tree_ident`).  ``build()`` constructs the lazy DataFrame
-    on a miss.  Only the plan (immutable) is reused — every action
-    still scans the parquet files; no data or results are cached.  Any
-    mutation of the tree (append, dynamic partition overwrite,
-    compaction) changes the token and rebuilds."""
-    cache: dict = spark.__dict__.setdefault("_pcs_store_plan_cache", {})
-    key = (key_path, _tree_ident(local_root))
-    df = cache.get(key)
-    if df is None:
-        df = build()
-        # drop superseded identities of the same path so a mutating
-        # store cannot grow the memo unboundedly
-        for k in [k for k in cache if k[0] == key_path and k != key]:
-            del cache[k]
-        cache[key] = df
-    return df
-
-
 def memoized_parquet(spark, path: str):
     """``spark.read.parquet`` with the resolved PLAN memoized per
-    session (:func:`memoized_read`) — the store-read twin of the table
-    catalog's plan memo.  Every ``spark.read.parquet`` call re-pays
-    driver file listing plus a footer schema-inference Spark job; a
-    probe loop that re-reads the same immutable store generation paid
-    that per call.  Non-local paths (s3a://, hdfs://) bypass the memo —
-    their identity cannot be stat'd cheaply."""
+    session (``core.session_cache``, kind ``"store"``) — the store-read
+    twin of the table catalog's plan memo.  Every ``spark.read.parquet``
+    call re-pays driver file listing plus a footer schema-inference
+    Spark job; a probe loop that re-reads the same immutable store
+    generation paid that per call.  Only the plan is reused — every
+    action still scans the files — and any mutation of the tree
+    (append, dynamic partition overwrite, compaction) changes its
+    identity and rebuilds.  Non-local paths (s3a://, hdfs://) bypass
+    the memo — their identity cannot be stat'd cheaply."""
     local = try_local_path(path)
     if local is None:
         return spark.read.parquet(path)
-    return memoized_read(spark, path, local, lambda: spark.read.parquet(path))
+    return session_cache.memo(
+        spark, ("store", path), local, lambda: spark.read.parquet(path)
+    )
 
 
 def read_batch(spark, store: str, batch_id: str):

@@ -794,9 +794,10 @@ def incremental_near_duplicates(
     new_bands = band_table(sigs, num_hashes, bands, hash_fn=hash_fn)
 
     # memoized_parquet: a steady-state ingest loop probes the same
-    # store generation per batch — the plan memo skips the per-call
-    # file listing + footer-inference Spark job (2 jobs/probe here);
-    # any store mutation changes the identity token and re-reads
+    # store generation per batch — the session plan memo skips the
+    # per-call file listing + footer-inference Spark job (2 jobs/probe
+    # here); any store mutation changes session_cache.ident and
+    # re-reads
     corpus_sigs = memoized_parquet(
         spark, os.path.join(store, "signatures")
     ).drop("_batch")

@@ -1093,15 +1093,15 @@ def _read_store_data(spark, data_dir: str):
     ]
     if not dirs:
         return _read_optional_parquet(spark, data_dir)
-    from physicsnemo_curator_spark.core.store import memoized_read
+    from physicsnemo_curator_spark.core import session_cache
 
     # plan memo: a probe loop re-reads the same generation per batch;
-    # the recursive identity token re-keys on ANY mutation under the
-    # generation dir (new batch partition, mid-flight compaction
-    # target, tombstone write)
-    return memoized_read(
+    # session_cache.ident walks the generation dir, so ANY mutation
+    # under it (new batch partition, mid-flight compaction target,
+    # tombstone write) re-keys the entry
+    return session_cache.memo(
         spark,
-        "storedata::" + data_dir,
+        ("storedata", data_dir),
         local,
         lambda: spark.read.option("basePath", data_dir).parquet(*dirs),
     )

@@ -24,6 +24,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from physicsnemo_curator_spark.core.session_cache import (
+    build_once,
+    fixture_dir,
+    memo,
+)
 from physicsnemo_curator_spark.functions import math as M
 from physicsnemo_curator_spark.operators import (
     components,
@@ -62,16 +67,10 @@ def _r6(c, name):
     return F.round(c, 6).alias(name)
 
 
-def _src_ident(path: str) -> str:
-    """Freshness token for a fixture-cache key: nanosecond mtime +
-    size (PIDs recycle inside containers; whole-second mtimes collide
-    on same-second regens).  The ONE copy of the identity rule — every
-    fixture/temp-shard cache keys through it."""
-    try:
-        st = os.stat(path)
-        return f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        return "absent"
+def _src(sf_dir: str, name: str) -> str:
+    """The parquet path of table ``name`` — the source a fixture or
+    session-cache entry is keyed on (``core.session_cache.ident``)."""
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 # --------------------------------------------------------------------------
@@ -1299,27 +1298,22 @@ def q_st3_stream_welford(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch sink), then checked against the batch power-sum oracle.
     Unlike q_st1/q_st2, whose declared bodies are batch twins, this
     executes ``readStream`` → GroupState folding → sink."""
-    import hashlib
-    import tempfile
-
     from physicsnemo_curator_spark.streaming import stateful
 
     events = _t(spark, sf_dir, "events")
     # Stream-readable copy (raw events parquet needs catalog
     # normalization): 4 files → 4 micro-batches under
     # maxFilesPerTrigger=1, so GroupState folds across batches.
-    # Keyed on (sf_dir, source mtime) so repeat invocations in one run
-    # reuse the copy, and on PID so concurrent processes sharing a box
-    # never overwrite a directory mid-readStream.
-    ident = _src_ident(os.path.join(sf_dir, "events.parquet"))
-    token = hashlib.md5(f"{sf_dir}:{ident}".encode()).hexdigest()[:12]
-    src = os.path.join(
-        tempfile.gettempdir(), f"pcs_stream_src_{token}_{os.getpid()}"
+    # Keyed on the source identity so repeat invocations in one run
+    # reuse the copy, and per process so concurrent processes sharing
+    # a box never overwrite a directory mid-readStream.
+    src = build_once(
+        fixture_dir("stream_src", _src(sf_dir, "events"), per_process=True),
+        lambda d: events.select("event_type", "value")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(d),
     )
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        events.select("event_type", "value").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(src)
     out = stateful.run_running_stats_foreachbatch(
         spark,
         src,
@@ -1348,26 +1342,26 @@ def _stage_click_purchase_streams(
     """The ONE construction of the stream-join gates' fixture: split
     ``events`` into 3-file click and purchase parquet sources under a
     content-keyed tmp dir (st4 and st5 must not drift — same cols,
-    same repartition, same _SUCCESS-guarded idempotent write)."""
-    import hashlib
-    import tempfile
-
+    same repartition, same build_once-guarded write)."""
     events = _t(spark, sf_dir, "events")
-    ident = _src_ident(os.path.join(sf_dir, "events.parquet"))
-    token = hashlib.md5(
-        f"{sf_dir}:{ident}:{tag}:{max_files_per_trigger}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(
-        tempfile.gettempdir(), f"pcs_{tag}_{token}_{os.getpid()}"
-    )
     cols = ["event_id", "user_id", "ts", "value"]
-    for side, etype in (("clicks", "click"), ("purchases", "purchase")):
-        d = os.path.join(base, side)
-        if not os.path.exists(os.path.join(d, "_SUCCESS")):
+
+    def build(base: str) -> None:
+        for side, etype in (("clicks", "click"), ("purchases", "purchase")):
             events.filter(F.col("event_type") == etype).select(
                 *cols
-            ).repartition(3).write.mode("overwrite").parquet(d)
-    return base
+            ).repartition(3).write.mode("overwrite").parquet(
+                os.path.join(base, side)
+            )
+
+    return build_once(
+        fixture_dir(
+            f"{tag}_m{max_files_per_trigger}",
+            _src(sf_dir, "events"),
+            per_process=True,
+        ),
+        build,
+    )
 
 
 def q_st4_stream_interval_join(
@@ -1557,26 +1551,12 @@ def _dash_store(spark: SparkSession, sf_dir: str):
     token path + deterministic retried-index recording (both gates
     must open the SAME store — a drifted path would silently read an
     empty ledger, since MetricsStore frames treat missing paths as
-    empty by design)."""
-    import hashlib
-    import tempfile
-
+    empty by design).  ``build_once`` clears a crashed attempt first:
+    record_index_results APPENDS, so its orphaned part files would
+    double-count under the fresh records."""
     from physicsnemo_curator_spark.core.metrics import MetricsStore
 
-    ident = _src_ident(os.path.join(sf_dir, "events.parquet"))
-    token = hashlib.md5(f"{sf_dir}:{ident}:dash".encode()).hexdigest()[:12]
-    mdir = os.path.join(
-        tempfile.gettempdir(), f"pcs_dash_{token}_{os.getpid()}"
-    )
-    store = MetricsStore(mdir)
-    # the _SUCCESS marker, not the bare directory: a write that died
-    # partway must rebuild, not serve a truncated ledger forever
-    if not os.path.exists(os.path.join(store.index_path, "_SUCCESS")):
-        import shutil
-
-        # record_index_results APPENDS — orphaned part files from the
-        # crashed attempt would double-count under the fresh records
-        shutil.rmtree(store.index_path, ignore_errors=True)
+    def build(mdir: str) -> None:
         events = _t(spark, sf_dir, "events")
         rows = (
             events.filter(F.col("event_id") < 2000)
@@ -1587,7 +1567,7 @@ def _dash_store(spark: SparkSession, sf_dir: str):
         # one record_index_results call → one shared epoch, so the
         # frame's (finished_at_epoch DESC, seq DESC) dedup must fall
         # through to seq: list order IS the retry order
-        store.record_index_results(
+        MetricsStore(mdir).record_index_results(
             spark,
             "run-dash",
             [
@@ -1606,7 +1586,13 @@ def _dash_store(spark: SparkSession, sf_dir: str):
                 for r in rows
             ],
         )
-    return store
+
+    return MetricsStore(
+        build_once(
+            fixture_dir("dash", _src(sf_dir, "events"), per_process=True),
+            build,
+        )
+    )
 
 
 def q_dashboard_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1848,30 +1834,24 @@ FROM k ORDER BY doc_id
 
 # Session-scoped materialization of the word-trigram shingle table:
 # four dedup operators consume the identical stream, so shingling is a
-# shared sub-plan (engine-level materialized view), not a per-query cost.
-_SHINGLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
+# shared sub-plan (engine-level materialized view), not a per-query
+# cost.  Held in the session memo (core.session_cache, kind
+# "shingles"), keyed on the documents table's identity: a table
+# regenerated at the same path is never served stale shingles, and the
+# superseded frame is unpersisted.
 def _cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # keyed on the SOURCE identity too (mtime_ns + size, the
-    # _fixture_dir rule): a documents table regenerated at the same
-    # path within one session must never be served stale shingles;
-    # the superseded entry is unpersisted on replacement
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
-    key = (id(spark.sparkContext), sf_dir, ident)
-    if key not in _SHINGLE_CACHE:
-        for k in [k for k in _SHINGLE_CACHE if k[:2] == key[:2]]:
-            try:
-                _SHINGLE_CACHE.pop(k).unpersist()
-            except Exception:
-                pass
-        docs = _t(spark, sf_dir, "documents")
-        _SHINGLE_CACHE[key] = dedup.shingle_table(docs, k=3, unit="word").persist()
-    return _SHINGLE_CACHE[key]
+    return memo(
+        spark,
+        ("shingles", sf_dir),
+        _src(sf_dir, "documents"),
+        lambda: dedup.shingle_table(
+            _t(spark, sf_dir, "documents"), k=3, unit="word"
+        ).persist(),
+    )
 
 
 # Session-scoped materialization of the near-dup PAIR stream — the
-# _SHINGLE_CACHE convention one level up: five queries (components,
+# shingle memo one level up (kind "pairs"): five queries (components,
 # representative, split_leakage_free, split_store path, minhash gate)
 # consume the IDENTICAL (a, b, jaccard) frame and each re-paid the
 # signatures → bands → verify-join pipeline (~1.7-2.1 s warm at sf0.1
@@ -1880,22 +1860,10 @@ def _cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # VALUES through different streams; persist() only — every result is
 # still computed from the parquet inputs, and SPARK_GRAFT_CLEARCACHE
 # drops it between queries like every other shared cache.
-_PAIR_CACHE: dict[tuple[int, str, str, str], DataFrame] = {}
-
-
 def _cached_near_dup_pairs(
     spark: SparkSession, sf_dir: str, hash_fn: str
 ) -> DataFrame:
-    # source-identity key + superseded-entry eviction: same rule as
-    # _cached_shingles above
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
-    key = (id(spark.sparkContext), sf_dir, hash_fn, ident)
-    if key not in _PAIR_CACHE:
-        for k in [k for k in _PAIR_CACHE if k[:3] == key[:3]]:
-            try:
-                _PAIR_CACHE.pop(k).unpersist()
-            except Exception:
-                pass
+    def build() -> DataFrame:
         sh = _cached_shingles(spark, sf_dir)
         if hash_fn == "jaccard":
             pairs = dedup.jaccard_pairs(sh).filter(F.col("jaccard") >= 0.8)
@@ -1904,8 +1872,11 @@ def _cached_near_dup_pairs(
             pairs = dedup.minhash_near_duplicates(
                 docs, threshold=0.8, shingles=sh, hash_fn=hash_fn
             )
-        _PAIR_CACHE[key] = pairs.persist()
-    return _PAIR_CACHE[key]
+        return pairs.persist()
+
+    return memo(
+        spark, ("pairs", sf_dir, hash_fn), _src(sf_dir, "documents"), build
+    )
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2164,56 +2135,51 @@ def _split_gate_store(spark: SparkSession, sf_dir: str, hash_fn: str) -> str:
     The pair stream is computed once and filtered per epoch (exact
     Jaccard and per-doc MinHash signatures are corpus-subset-invariant,
     so seed pairs == full pairs with both endpoints in the seed)."""
-    import hashlib
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
-    token = hashlib.md5(
-        f"{sf_dir}:{ident}:splitstore:{hash_fn}".encode()
-    ).hexdigest()[:12]
-    store = os.path.join(
-        tempfile.gettempdir(), f"pcs_split_store_{token}_{os.getpid()}"
+
+    def build(store: str) -> None:
+        pairs = _cached_near_dup_pairs(
+            spark, sf_dir, "jaccard" if hash_fn == "arith" else hash_fn
+        )
+        # reused by both epochs — materialize the pair stream once
+        pairs = pairs.select("a", "b").localCheckpoint()
+        w = {"train": 0.8, "val": 0.1, "test": 0.1}
+        seed_docs = docs.filter(F.col("doc_id") % 3 != 2)
+        seed_pairs = pairs.filter(
+            (F.col("a") % 3 != 2) & (F.col("b") % 3 != 2)
+        )
+        seed_groups = components.dedup_groups(seed_pairs).select(
+            "doc_id", "component"
+        )
+        seed_assign = sampling.leakage_free_splits(
+            seed_docs, seed_groups, w, seed=42, hash_fn=hash_fn
+        )
+        sampling.write_split_store(
+            seed_assign.select("doc_id", "split", "component"), store
+        )
+        full_groups = components.dedup_groups(pairs).select(
+            "doc_id", "component"
+        )
+        sampling.assign_splits_incremental(
+            spark,
+            docs.filter(F.col("doc_id") % 3 == 2),
+            full_groups,
+            w,
+            store,
+            seed=42,
+            hash_fn=hash_fn,
+            update_store=True,
+            batch_id="b1",
+        )
+
+    return build_once(
+        fixture_dir(
+            f"split_store_{hash_fn}",
+            _src(sf_dir, "documents"),
+            per_process=True,
+        ),
+        build,
     )
-    marker = os.path.join(store, "_PCS_STORE_DONE")
-    if os.path.exists(marker):
-        return store
-    pairs = _cached_near_dup_pairs(
-        spark, sf_dir, "jaccard" if hash_fn == "arith" else hash_fn
-    )
-    # reused by both epochs — materialize the pair stream once
-    pairs = pairs.select("a", "b").localCheckpoint()
-    w = {"train": 0.8, "val": 0.1, "test": 0.1}
-    seed_docs = docs.filter(F.col("doc_id") % 3 != 2)
-    seed_pairs = pairs.filter(
-        (F.col("a") % 3 != 2) & (F.col("b") % 3 != 2)
-    )
-    seed_groups = components.dedup_groups(seed_pairs).select(
-        "doc_id", "component"
-    )
-    seed_assign = sampling.leakage_free_splits(
-        seed_docs, seed_groups, w, seed=42, hash_fn=hash_fn
-    )
-    sampling.write_split_store(
-        seed_assign.select("doc_id", "split", "component"), store
-    )
-    full_groups = components.dedup_groups(pairs).select(
-        "doc_id", "component"
-    )
-    sampling.assign_splits_incremental(
-        spark,
-        docs.filter(F.col("doc_id") % 3 == 2),
-        full_groups,
-        w,
-        store,
-        seed=42,
-        hash_fn=hash_fn,
-        update_store=True,
-        batch_id="b1",
-    )
-    with open(marker, "w") as fh:
-        fh.write("ok")
-    return store
 
 
 def q_split_store(
@@ -2527,8 +2493,6 @@ def q_grib2_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (variable, time).  Values are exact binary fractions (k/4) on an
     integer-degree grid, so the DuckDB oracle replays the whole lattice
     arithmetic bit-for-bit without ever seeing a GRIB byte."""
-    import hashlib
-    import tempfile
     from datetime import datetime
 
     import numpy as np
@@ -2557,11 +2521,8 @@ def q_grib2_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _vals(tidx: int, vidx: int) -> np.ndarray:
         return ((31 * jj + 7 * ii + 13 * tidx + 3 * vidx) % 400) / 4.0
 
-    token = hashlib.md5(f"grib2:{sf_dir}".encode()).hexdigest()[:12]
-    path = os.path.join(
-        tempfile.gettempdir(), f"pcs_grib2_{token}_{os.getpid()}.grib2"
-    )
-    if not os.path.exists(path):
+    # synthetic lattice: the fixture depends on no source table
+    def build(d: str) -> None:
         msgs = []
         for tidx, t in enumerate(times):
             for vidx, (cat, num, lt, lv) in enumerate(
@@ -2595,7 +2556,12 @@ def q_grib2_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     values=_vals(tidx, 2),
                 )
             )
-        write_grib2(path, msgs)
+        write_grib2(os.path.join(d, "lattice.grib2"), msgs)
+
+    path = os.path.join(
+        build_once(fixture_dir("grib2", per_process=True), build),
+        "lattice.grib2",
+    )
     df = read_grib2(spark, [path], variables=["t2m", "u10m"])
     return (
         df.groupBy("variable", "time")
@@ -2785,22 +2751,11 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprinted per host bucket.  The oracle replays the bucketing
     and fingerprint arithmetic on the documents table directly, so a
     framing/decode bug anywhere in the codec breaks the hash."""
-    import hashlib
-    import tempfile
-
     from physicsnemo_curator_spark.sources.warc import read_wet, write_wet
 
-    # Key the temp-shard cache on the source parquet's identity (the
-    # q_st3_stream_welford discipline): a regenerated documents table
-    # must never be served stale shards from an earlier process — PIDs
-    # recycle inside containers, so pid alone is not a freshness token.
-    # Nanosecond mtime + size, not whole-second mtime: two regens
-    # within one second (or a cp -p with preserved times but different
-    # size) must still produce distinct tokens.
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
-    token = hashlib.md5(f"warc:{sf_dir}:{ident}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"pcs_wet_{token}")
-    os.makedirs(base, exist_ok=True)
+    # shared across processes, keyed on the documents table's identity:
+    # a regenerated table must never be served stale shards
+    base = _fixture_dir(sf_dir, "wet")
     paths = [
         os.path.join(base, f"shard{shard}.warc.wet.gz")
         for shard in range(4)
@@ -4181,10 +4136,10 @@ def _ivfpq_gate_store(spark: SparkSession, sf_dir: str):
     generation (numeric ``_gen`` order — the lexical ``_batch`` rule
     inverted here, ``'compacted' > '2026-02-01'``) and the wrong rows
     stranded in moved-away-from cells must lose everywhere.  Returns
-    ``(store, centers, codebooks)``."""
-    import hashlib
-    import tempfile
-
+    ``(store, centers, codebooks)``.  The build is FOUR steps, and
+    parquet's _SUCCESS reappears after the first — ``build_once``'s
+    marker makes a crash between them rebuild, not serve a half-lived
+    index."""
     from physicsnemo_curator_spark.operators import mllib_ann
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -4199,18 +4154,8 @@ def _ivfpq_gate_store(spark: SparkSession, sf_dir: str):
     s16 = mllib_ann.md5_sample_centroids(corpus, k=16)
     centers = s16[:8]
     cbs = mllib_ann.pq_train(corpus, m=8, ks=16, dim=64, sample_vectors=s16)
-    ident = _src_ident(os.path.join(sf_dir, "embeddings.parquet"))
-    token = hashlib.md5(
-        f"{sf_dir}:{ident}:ivfpq2".encode()
-    ).hexdigest()[:12]
-    store = os.path.join(
-        tempfile.gettempdir(), f"pcs_ivfpq_idx_{token}_{os.getpid()}"
-    )
-    # own completion marker: the build is FOUR steps, and parquet's
-    # _SUCCESS reappears after the first — a crash between them must
-    # rebuild, not serve a half-lived index
-    marker = os.path.join(store, "_PCS_INDEX_DONE")
-    if not os.path.exists(marker):
+
+    def build(store: str) -> None:
         mllib_ann.write_ivfpq_index(corpus, centers, cbs, store)
         mllib_ann.write_ivfpq_index(
             odd_wrong, centers, cbs, store,
@@ -4220,8 +4165,11 @@ def _ivfpq_gate_store(spark: SparkSession, sf_dir: str):
         mllib_ann.write_ivfpq_index(
             odd, centers, cbs, store, mode="append", batch_id="2026-02-01"
         )
-        with open(marker, "w") as fh:
-            fh.write("ok")
+
+    store = build_once(
+        fixture_dir("ivfpq_idx", _src(sf_dir, "embeddings"), per_process=True),
+        build,
+    )
     return store, centers, cbs
 
 
@@ -4964,9 +4912,6 @@ def q_semantic_incremental(
     variant quadratic at 10×, 178 s); the oracle-checked variant pins
     k=8 and fails LOUDLY beyond the gate corpus instead of silently
     diverging — the bench twin runs adaptive."""
-    import hashlib
-    import tempfile
-
     from physicsnemo_curator_spark.operators import mllib_ann
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -4983,15 +4928,12 @@ def q_semantic_incremental(
             f"adapts k to {k}; call with pin_oracle_k=False (no "
             "oracle) for large corpora"
         )
-    ident = _src_ident(os.path.join(sf_dir, "embeddings.parquet"))
-    token = hashlib.md5(
-        f"{sf_dir}:{ident}:sem:{k}".encode()
-    ).hexdigest()[:12]
-    store = os.path.join(
-        tempfile.gettempdir(), f"pcs_sem_store_{token}_{os.getpid()}"
+    store = build_once(
+        fixture_dir(
+            f"sem_store_k{k}", _src(sf_dir, "embeddings"), per_process=True
+        ),
+        lambda d: mllib_ann.write_semantic_store(corpus, centers, d),
     )
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        mllib_ann.write_semantic_store(corpus, centers, store)
     out = mllib_ann.incremental_semantic_dedup(
         spark, batch, centers, store, threshold=0.35, dot=dot
     )
@@ -5153,26 +5095,15 @@ def q_dedup_incremental(
     hash_fn='md5' makes signatures, buckets and estimates
     engine-reproducible so DuckDB replays the whole store+probe;
     the benched twin runs the xxhash64 production store."""
-    import hashlib
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    try:
-        mtime = int(
-            os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
-        )
-    except OSError:
-        mtime = 0
-    token = hashlib.md5(
-        f"{sf_dir}:{mtime}:{hash_fn}".encode()
-    ).hexdigest()[:12]
-    store = os.path.join(
-        tempfile.gettempdir(), f"pcs_mh_store_{token}_{os.getpid()}"
+    store = build_once(
+        fixture_dir(
+            f"mh_store_{hash_fn}", _src(sf_dir, "documents"), per_process=True
+        ),
+        lambda d: dedup.write_minhash_store(corpus, d, hash_fn=hash_fn),
     )
-    if not os.path.exists(os.path.join(store, "bands")):
-        dedup.write_minhash_store(corpus, store, hash_fn=hash_fn)
     out = dedup.incremental_near_duplicates(
         spark, batch, store, threshold=0.8, hash_fn=hash_fn
     )
@@ -5326,18 +5257,10 @@ FROM pairs WHERE bit_count(xor(sa, sb)) <= 8 ORDER BY a, b
 # oracle-tested in tests/test_oracle.py; the rotation decides only which
 # 50 the external driver re-verifies this round.
 def _fixture_dir(sf_dir: str, tag: str) -> str:
-    """Temp fixture directory keyed on the source parquet's identity
-    (the q_warc_scan discipline, queries.py ~:2060): a regenerated
-    documents table must never be served stale fixtures — nanosecond
-    mtime + size, not pid (pids recycle inside containers)."""
-    import hashlib
-    import tempfile
-
-    ident = _src_ident(os.path.join(sf_dir, "documents.parquet"))
-    token = hashlib.md5(f"{tag}:{sf_dir}:{ident}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"pcs_{tag}_{token}")
-    os.makedirs(base, exist_ok=True)
-    return base
+    """Shared temp fixture directory derived from the documents table
+    (``core.session_cache.fixture_dir``): a regenerated table gets a
+    new directory, so it is never served stale fixtures."""
+    return fixture_dir(tag, _src(sf_dir, "documents"))
 
 
 def _fan_mesh(doc_slice):

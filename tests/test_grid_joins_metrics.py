@@ -237,12 +237,13 @@ def test_metrics_run_id_is_not_spliced_into_sql(spark, tmp_path):
 
 def test_dash_store_rebuild_clears_crashed_debris(spark, tmp_path, monkeypatch):
     """A ledger rebuild after a crashed write (part files present, no
-    _SUCCESS) must clear the directory first: record_index_results
-    APPENDS, so orphaned part files would double-count raw-record
-    consumers like workers_df."""
+    completion marker) must clear the directory first:
+    record_index_results APPENDS, so orphaned part files would
+    double-count raw-record consumers like workers_df."""
     import os
     import tempfile
 
+    from physicsnemo_curator_spark.core import session_cache
     from physicsnemo_curator_spark.plans import queries as Q
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
@@ -250,7 +251,8 @@ def test_dash_store_rebuild_clears_crashed_debris(spark, tmp_path, monkeypatch):
     store = Q._dash_store(spark, sf)
     n_clean = spark.read.parquet(store.index_path).count()
     # simulate the crash: keep the part files, drop the marker
-    os.remove(os.path.join(store.index_path, "_SUCCESS"))
+    mdir = os.path.dirname(store.index_path)
+    os.remove(os.path.join(mdir, session_cache.MARKER))
     store2 = Q._dash_store(spark, sf)
     assert store2.index_path == store.index_path
     assert spark.read.parquet(store2.index_path).count() == n_clean

@@ -16,6 +16,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from physicsnemo_curator_spark.core import session_cache
 from physicsnemo_curator_spark.sources.tables import load_table
 
 
@@ -40,8 +41,11 @@ def test_load_table_memo_hit_and_identity_miss(spark, tmp_path):
     assert df3.count() == 5
 
     # the superseded identity entry for the same path was evicted
-    cache = spark.__dict__["_pcs_table_plan_cache"]
-    assert sum(1 for k in cache if k[0] == p) == 1
+    held = [
+        df for k, df in session_cache.entries(spark, "table").items()
+        if k[1] == p
+    ]
+    assert len(held) == 1 and held[0] is df3
 
 
 def test_load_table_memo_directory_inplace_rewrite(spark, tmp_path):
@@ -103,5 +107,8 @@ def test_memoized_parquet_hit_and_deep_mutation_miss(spark, tmp_path):
     assert df3 is not df1
     assert df3.count() == 5
 
-    cache = spark.__dict__["_pcs_store_plan_cache"]
-    assert sum(1 for k in cache if k[0] == store) == 1
+    held = [
+        df for k, df in session_cache.entries(spark, "store").items()
+        if k[1] == store
+    ]
+    assert len(held) == 1 and held[0] is df3
