@@ -1,5 +1,5 @@
 """The one owner of session state: source identity, the per-session
-memo, and per-process fixture stores.
+memo, and fixture directories.
 
 - :func:`ident` is the ONE freshness rule: every file's
   ``(relpath, mtime_ns, size)`` under a path (one ``stat`` for a
@@ -14,12 +14,15 @@ memo, and per-process fixture stores.
   ``unpersist()``s it when it is cached.  :func:`stats` counts hits
   and misses per kind.
 - :func:`fixture_dir` derives a temp fixture path from a tag and its
-  sources' identities; :func:`build_once` is the completion rule for
-  the per-process ones (no marker: clear, build, mark).
+  sources' identities; :func:`build_once` is the ONE completion rule
+  for every fixture directory, shared or per-process: build in a
+  pid-unique sibling, mark it, rename it onto the path.  A marked path
+  is complete and never rebuilt; anything else is rebuilt.
 """
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
 import os
 import shutil
@@ -93,8 +96,9 @@ def stats(spark) -> dict[str, tuple[int, int]]:
 def fixture_dir(tag: str, *sources: str, per_process: bool = False) -> str:
     """Temp fixture directory for ``tag`` built from ``sources``: a
     rewritten source gets a new directory.  ``per_process`` adds the
-    pid, for stores one process builds and reads under
-    :func:`build_once`; shared ones publish file by file instead."""
+    pid, for stores one process builds and then mutates or reads as a
+    whole; without it every process on the box shares the directory.
+    Either way it is completed by :func:`build_once`."""
     key = "|".join([tag, *(f"{s}:{ident(s)}" for s in sources)])
     name = f"pcs_{tag}_{hashlib.md5(key.encode()).hexdigest()[:12]}"
     if per_process:
@@ -105,13 +109,37 @@ def fixture_dir(tag: str, *sources: str, per_process: bool = False) -> str:
 
 
 def build_once(path: str, build) -> str:
-    """Run ``build(path)`` unless ``path`` carries the completion
-    marker.  An unmarked directory is debris of a build that died
-    partway, so it is cleared first."""
+    """``path``, completed by ``build`` at most once.
+
+    ``build(tmp)`` fills a pid-unique sibling directory; the marker is
+    written inside it and the directory is renamed onto ``path``, so a
+    reader never sees a partial build.  A marked ``path`` runs nothing.
+    An unmarked ``path`` (empty, or debris left by an older in-place
+    writer) is cleared at the rename.  A ``build`` that raises leaves
+    ``path`` unmarked and its temp directory removed, so the next call
+    rebuilds.  Two processes may both build: the rename runs under an
+    exclusive lock on the parent directory, and the one that finds
+    ``path`` already marked discards its temp directory and returns the
+    winner's.  The rename is safe because no fixture store records its
+    own absolute path; memo entries a build keys on the temp path are
+    never read again (a later build of the same name re-stats it)."""
     marker = os.path.join(path, MARKER)
-    if not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-        os.makedirs(path)
-        build(path)
-        open(marker, "w").close()
+    if os.path.exists(marker):
+        return path
+    tmp = f"{path}.{os.getpid()}.tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    try:
+        build(tmp)
+        open(os.path.join(tmp, MARKER), "w").close()
+        lock = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+        try:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            if not os.path.exists(marker):
+                shutil.rmtree(path, ignore_errors=True)
+                os.rename(tmp, path)
+        finally:
+            os.close(lock)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return path

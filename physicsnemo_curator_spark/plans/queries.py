@@ -2753,21 +2753,14 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     framing/decode bug anywhere in the codec breaks the hash."""
     from physicsnemo_curator_spark.sources.warc import read_wet, write_wet
 
-    # shared across processes, keyed on the documents table's identity:
-    # a regenerated table must never be served stale shards
-    base = _fixture_dir(sf_dir, "wet")
-    paths = [
-        os.path.join(base, f"shard{shard}.warc.wet.gz")
-        for shard in range(4)
-    ]
-    if not _fixtures_ready(*paths):
+    def build(root: str) -> None:
         docs = (
             _t(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 200)
             .select("doc_id", "text")
             .collect()
         )
-        for shard, p in enumerate(paths):
+        for shard in range(4):
             recs = [
                 {
                     "uri": f"https://s{r['doc_id'] % 5}.example/{r['doc_id']}",
@@ -2776,7 +2769,15 @@ def q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in docs
                 if r["doc_id"] % 4 == shard
             ]
-            _publish(p, lambda t, recs=recs: write_wet(t, recs))
+            write_wet(os.path.join(root, f"shard{shard}.warc.wet.gz"), recs)
+
+    # shared across processes, keyed on the documents table's identity:
+    # a regenerated table must never be served stale shards
+    base = build_once(_fixture_dir(sf_dir, "wet"), build)
+    paths = [
+        os.path.join(base, f"shard{shard}.warc.wet.gz")
+        for shard in range(4)
+    ]
     scanned = read_wet(spark, paths, lang_id=False)
     return (
         scanned.groupBy("source")
@@ -5259,7 +5260,10 @@ FROM pairs WHERE bit_count(xor(sa, sb)) <= 8 ORDER BY a, b
 def _fixture_dir(sf_dir: str, tag: str) -> str:
     """Shared temp fixture directory derived from the documents table
     (``core.session_cache.fixture_dir``): a regenerated table gets a
-    new directory, so it is never served stale fixtures."""
+    new directory, so it is never served stale fixtures.  Scan gates
+    complete it with ``build_once``; sink round-trip gates rewrite
+    their output in it on every run, because the write is what they
+    test."""
     return fixture_dir(tag, _src(sf_dir, "documents"))
 
 
@@ -5276,50 +5280,6 @@ def _fan_mesh(doc_slice):
     pdata = {"w": [float(w) for _, w in doc_slice]}
     cells = [[0, i, i + 1] for i in range(1, len(pts) - 1)]
     return pts, cells, pdata
-
-
-def _publish(path: str, write_fn) -> None:
-    """Atomic fixture publish: write to a pid-unique temp name, then
-    rename — a concurrent writer can never expose a torn file."""
-    if os.path.exists(path):
-        return
-    tmp = f"{path}.{os.getpid()}.tmp"
-    write_fn(tmp)
-    os.replace(tmp, path)
-
-
-def _publish_tree(path: str, write_fn) -> None:
-    """Directory-fixture twin of :func:`_publish`: build the tree under
-    a pid-unique temp name, rename into place, then drop a sibling
-    ``.published`` marker.  The marker (not bare existence) gates the
-    skip so a pre-discipline in-place store is rebuilt once; a
-    concurrent writer losing the rename race discards its temp tree
-    and uses the winner's."""
-    import shutil
-
-    marker = path + ".published"
-    if os.path.exists(marker):
-        return
-    tmp = f"{path}.{os.getpid()}.tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_fn(tmp)
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        os.replace(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(path):
-            raise
-    open(marker, "w").close()
-
-
-def _fixtures_ready(*paths: str) -> bool:
-    """True when every fixture target already exists — the scan gates
-    use this to skip the fixture-builder's driver collect + build loop
-    on warm runs (one saved Spark job + driver round-trip per gate;
-    guide §5: the driver does no data work).  The cold path keeps
-    :func:`_publish` as the per-file atomic/racing guard."""
-    return all(os.path.exists(p) for p in paths)
 
 
 def q_vtk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5341,15 +5301,10 @@ def q_vtk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from physicsnemo_curator_spark.sources.vtk import read_vtk
     from physicsnemo_curator_spark.sources.vtk_xml import write_vtp, write_vtu
 
-    base = _fixture_dir(sf_dir, "vtk")
     fmts = ["ascii", "binary", "appended", "appended-raw"]
-    paths = [
-        os.path.join(base, f"mesh{m}.vtu" if m < 4 else f"mesh{m}.vtp")
-        for m in range(5)
-    ]
-    if _fixtures_ready(*paths):
-        docs = []  # warm path: every mesh file is already published
-    else:
+    names = [f"mesh{m}.vtu" if m < 4 else f"mesh{m}.vtp" for m in range(5)]
+
+    def build(root: str) -> None:
         docs = sorted(
             (
                 (r["doc_id"], r["n_chars"])
@@ -5359,38 +5314,33 @@ def q_vtk_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .collect()
             )
         )
-    for m in range(5) if docs else ():
-        mine = [(d, w) for d, w in docs if d % 5 == m]
-        if len(mine) < 3:
-            # a mesh with <3 points writes zero fan cells, the inner
-            # cell/area joins drop it, and the oracle (which emits
-            # n_points - 2 unconditionally) would report a spurious
-            # mismatch — fail LOUDLY instead on a too-small custom
-            # documents table
-            raise ValueError(
-                f"q_vtk_scan fixture needs >= 3 documents with doc_id "
-                f"% 5 == {m} under doc_id < 150; this sf dir has "
-                f"{len(mine)} — the driver gate requires the standard "
-                "testdata documents table (doc_id 0..N contiguous, "
-                "N >= 15)"
-            )
-        pts, cells, pdata = _fan_mesh(mine)
-        cdata = {"area": [float(2 * c + m) for c in range(len(cells))]}
-        if m < 4:
-            _publish(
-                paths[m],
-                lambda t, pts=pts, cells=cells, pdata=pdata, cdata=cdata,
-                fmt=fmts[m]: write_vtu(
-                    pts, cells, None, pdata, t, cell_data=cdata, fmt=fmt
-                ),
-            )
-        else:
-            _publish(
-                paths[m],
-                lambda t, pts=pts, cells=cells, pdata=pdata, cdata=cdata:
-                write_vtp(pts, cells, pdata, t, cell_data=cdata, fmt="appended"),
-            )
+        for m in range(5):
+            mine = [(d, w) for d, w in docs if d % 5 == m]
+            if len(mine) < 3:
+                # a mesh with <3 points writes zero fan cells, the inner
+                # cell/area joins drop it, and the oracle (which emits
+                # n_points - 2 unconditionally) would report a spurious
+                # mismatch — fail LOUDLY instead on a too-small custom
+                # documents table
+                raise ValueError(
+                    f"q_vtk_scan fixture needs >= 3 documents with doc_id "
+                    f"% 5 == {m} under doc_id < 150; this sf dir has "
+                    f"{len(mine)} — the correctness gate requires the standard "
+                    "testdata documents table (doc_id 0..N contiguous, "
+                    "N >= 15)"
+                )
+            pts, cells, pdata = _fan_mesh(mine)
+            cdata = {"area": [float(2 * c + m) for c in range(len(cells))]}
+            out = os.path.join(root, names[m])
+            if m < 4:
+                write_vtu(
+                    pts, cells, None, pdata, out, cell_data=cdata, fmt=fmts[m]
+                )
+            else:
+                write_vtp(pts, cells, pdata, out, cell_data=cdata, fmt="appended")
 
+    base = build_once(_fixture_dir(sf_dir, "vtk"), build)
+    paths = [os.path.join(base, n) for n in names]
     t = read_vtk(spark, paths)
     pts_agg = t["points"].groupBy("mesh_id").agg(
         F.count("*").alias("n_points"),
@@ -5482,15 +5432,9 @@ def q_vti_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from physicsnemo_curator_spark.sources.vtk_xml import write_vti
 
-    base = _fixture_dir(sf_dir, "vti")
     fmts = ["ascii", "binary", "appended", "appended-raw"]
-    grid_paths = [
-        os.path.join(base, f"grid{g}.vti" if g < 4 else f"grid{g}.vtk")
-        for g in range(5)
-    ]
-    if _fixtures_ready(*grid_paths):
-        chars = {}  # warm path: every grid file is already published
-    else:
+
+    def build(root: str) -> None:
         chars = {
             r["doc_id"]: r["n_chars"]
             for r in _t(spark, sf_dir, "documents")
@@ -5507,33 +5451,27 @@ def q_vti_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"q_vti_scan fixture needs contiguous doc_id 0..119 in "
                 f"the documents table; this sf dir is missing "
                 f"{len(missing)} ids (first: {missing[:5]}) — the "
-                "driver gate requires the standard testdata documents "
+                "correctness gate requires the standard testdata documents "
                 "table"
             )
-    for g in range(5) if chars else ():
-        vals = [float(chars[g * 24 + flat]) for flat in range(24)]
-        origin = (g * 1.5, 0.0, 0.0)
-        if g < 4:
-            cvals = [float(c + 7 * g) for c in range(6)]
-            _publish(
-                os.path.join(base, f"grid{g}.vti"),
-                lambda t, vals=vals, cvals=cvals, origin=origin,
-                fmt=fmts[g]: write_vti(
-                    (4, 3, 2), {"v": vals}, t, cell_data={"cv": cvals},
-                    origin=origin, spacing=(0.5, 1.0, 2.0), fmt=fmt,
-                ),
-            )
-        else:
-            # legacy STRUCTURED_POINTS (point data only) — the content
-            # sniff must route it through the legacy kernel mid-scan
-            _publish(
-                os.path.join(base, f"grid{g}.vtk"),
-                lambda t, vals=vals, origin=origin: write_structured_points(
-                    (4, 3, 2), {"v": vals}, t,
+        for g in range(5):
+            vals = [float(chars[g * 24 + flat]) for flat in range(24)]
+            origin = (g * 1.5, 0.0, 0.0)
+            if g < 4:
+                write_vti(
+                    (4, 3, 2), {"v": vals}, os.path.join(root, f"grid{g}.vti"),
+                    cell_data={"cv": [float(c + 7 * g) for c in range(6)]},
+                    origin=origin, spacing=(0.5, 1.0, 2.0), fmt=fmts[g],
+                )
+            else:
+                # legacy STRUCTURED_POINTS (point data only) — the content
+                # sniff must route it through the legacy kernel mid-scan
+                write_structured_points(
+                    (4, 3, 2), {"v": vals}, os.path.join(root, f"grid{g}.vtk"),
                     origin=origin, spacing=(0.5, 1.0, 2.0),
-                ),
-            )
+                )
 
+    base = build_once(_fixture_dir(sf_dir, "vti"), build)
     t = read_image_data(spark, base, glob="*.vt[ik]", cache=True)
     pt = t["grid"].groupBy("grid_id").agg(
         F.count("*").alias("n_sites"),
@@ -5599,16 +5537,7 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_streaming_bloom_dedup,
     )
 
-    base = _fixture_dir(sf_dir, "sbloom")
-    src = os.path.join(base, "src")
-    os.makedirs(src, exist_ok=True)
-    batch_paths = [os.path.join(src, f"b{b}.parquet") for b in range(3)]
-    # readiness and id-emptiness are SEPARATE signals: a corpus with
-    # zero doc_id < 480 must still publish its three (empty) batch
-    # files on the cold path, or the stream would find no source files
-    ready = _fixtures_ready(*batch_paths)
-    ids: list = []
-    if not ready:
+    def build(root: str) -> None:
         ids = sorted(
             r["doc_id"]
             for r in _t(spark, sf_dir, "documents")
@@ -5616,10 +5545,11 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id")
             .collect()
         )
-    for b, p in enumerate(batch_paths) if not ready else ():
-        mine = [d for d in ids if d // 160 == b]
-
-        def _write(t, mine=mine):
+        # all three batch files are written even when empty: a corpus
+        # with zero doc_id < 480 must still give the stream its sources
+        for b in range(3):
+            mine = [d for d in ids if d // 160 == b]
+            p = os.path.join(root, f"b{b}.parquet")
             pq.write_table(
                 pa.table(
                     {
@@ -5629,13 +5559,14 @@ def q_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ),
                     }
                 ),
-                t,
+                p,
             )
+            # deterministic trigger order: the file stream source orders
+            # by modification time, so pin ascending mtimes per batch
+            os.utime(p, (1_000_000_000 + 1000 * b, 1_000_000_000 + 1000 * b))
 
-        _publish(p, _write)
-        # deterministic trigger order: the file stream source orders
-        # by modification time, so pin ascending mtimes per batch
-        os.utime(p, (1_000_000_000 + 1000 * b, 1_000_000_000 + 1000 * b))
+    base = _fixture_dir(sf_dir, "sbloom")
+    src = build_once(os.path.join(base, "src"), build)
     out_dir = os.path.join(base, "out")
     run_streaming_bloom_dedup(
         spark,
@@ -6042,17 +5973,9 @@ def q_vtk_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from physicsnemo_curator_spark.sources.vtk import read_vtk_domain
     from physicsnemo_curator_spark.sources.vtk_xml import write_vtu
 
-    base = _fixture_dir(sf_dir, "vtkdom")
     fmts = ["ascii", "binary", "appended", "appended-raw", "appended"]
-    expected = [
-        os.path.join(base, f"case{c}", f"{part}_m.vtu")
-        for c in range(5)
-        for part in ("volume", "boundary")
-        if not (c == 4 and part == "boundary")
-    ]
-    if _fixtures_ready(*expected):
-        docs = []  # warm path: every case file is already published
-    else:
+
+    def build(root: str) -> None:
         docs = sorted(
             (
                 (r["doc_id"], r["n_chars"])
@@ -6062,22 +5985,22 @@ def q_vtk_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .collect()
             )
         )
-    for c in range(5) if docs else ():
-        case_dir = os.path.join(base, f"case{c}")
-        os.makedirs(case_dir, exist_ok=True)
-        for part, lo, hi in (("volume", 0, 8), ("boundary", 8, 12)):
-            if c == 4 and part == "boundary":
-                continue  # unpaired volume must survive as standalone
-            mine = [
-                (d, w) for d, w in docs if c * 12 + lo <= d < c * 12 + hi
-            ]
-            pts, cells, pdata = _fan_mesh(mine)
-            _publish(
-                os.path.join(case_dir, f"{part}_m.vtu"),
-                lambda t, pts=pts, cells=cells, pdata=pdata,
-                fmt=fmts[c]: write_vtu(pts, cells, None, pdata, t, fmt=fmt),
-            )
+        for c in range(5):
+            case_dir = os.path.join(root, f"case{c}")
+            os.makedirs(case_dir)
+            for part, lo, hi in (("volume", 0, 8), ("boundary", 8, 12)):
+                if c == 4 and part == "boundary":
+                    continue  # unpaired volume must survive as standalone
+                mine = [
+                    (d, w) for d, w in docs if c * 12 + lo <= d < c * 12 + hi
+                ]
+                pts, cells, pdata = _fan_mesh(mine)
+                write_vtu(
+                    pts, cells, None, pdata,
+                    os.path.join(case_dir, f"{part}_m.vtu"), fmt=fmts[c],
+                )
 
+    base = build_once(_fixture_dir(sf_dir, "vtkdom"), build)
     t = read_vtk_domain(
         spark,
         base,
@@ -6805,22 +6728,7 @@ def q_dataset_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from physicsnemo_curator_spark.sources.vtk_xml import write_vtu
 
-    base = _fixture_dir(sf_dir, "dsl")
-    expected = (
-        [os.path.join(base, "run_1", "volume_1.vtu")]
-        + [
-            os.path.join(base, "run_2", f"volume_2.vtu.{k}.part")
-            for k in range(12)
-        ]
-        + [os.path.join(base, "run_3", "volume_3.vtu")]
-        + [
-            os.path.join(base, f"run_{i}", f"force_mom_{i}.csv")
-            for i in (1, 2, 3)
-        ]
-    )
-    if _fixtures_ready(*expected):
-        docs = []  # warm path: every run file is already published
-    else:
+    def build(root: str) -> None:
         docs = sorted(
             (
                 (r["doc_id"], r["n_chars"])
@@ -6830,44 +6738,34 @@ def q_dataset_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .collect()
             )
         )
-    for i in (1, 2, 3) if docs else ():
-        mine = [(d, w) for d, w in docs if d % 3 == i - 1]
-        if len(mine) < 3:
-            raise ValueError(
-                f"q_dataset_layout fixture needs >= 3 documents with "
-                f"doc_id % 3 == {i - 1} under doc_id < 90 — the driver "
-                "gate requires the standard testdata documents table"
-            )
-        rdir = os.path.join(base, f"run_{i}")
-        os.makedirs(rdir, exist_ok=True)
-        pts, cells, pdata = _fan_mesh(mine)
-        if i == 2:
-            # split-part volume: write whole bytes once, shard into 12
-            # unpadded parts (numeric-sort trap)
-            scratch = os.path.join(rdir, f".whole.{os.getpid()}")
-            write_vtu(pts, cells, None, pdata, scratch, fmt="appended")
-            blob = open(scratch, "rb").read()
-            os.remove(scratch)
-            sz = -(-len(blob) // 12)
-            for k in range(12):
-                chunk = blob[k * sz : (k + 1) * sz]
-                _publish(
-                    os.path.join(rdir, f"volume_2.vtu.{k}.part"),
-                    lambda t, c=chunk: open(t, "wb").write(c),
+        for i in (1, 2, 3):
+            mine = [(d, w) for d, w in docs if d % 3 == i - 1]
+            if len(mine) < 3:
+                raise ValueError(
+                    f"q_dataset_layout fixture needs >= 3 documents with "
+                    f"doc_id % 3 == {i - 1} under doc_id < 90 — the correctness "
+                    "gate requires the standard testdata documents table"
                 )
-        else:
-            _publish(
-                os.path.join(rdir, f"volume_{i}.vtu"),
-                lambda t, pts=pts, cells=cells, pdata=pdata: write_vtu(
-                    pts, cells, None, pdata, t, fmt="appended"
-                ),
-            )
-        cd = sum(w for _, w in mine)
-        _publish(
-            os.path.join(rdir, f"force_mom_{i}.csv"),
-            lambda t, cd=cd: open(t, "w").write(f"cd\n{cd}\n"),
-        )
+            rdir = os.path.join(root, f"run_{i}")
+            os.makedirs(rdir)
+            pts, cells, pdata = _fan_mesh(mine)
+            whole = os.path.join(rdir, f"volume_{i}.vtu")
+            write_vtu(pts, cells, None, pdata, whole, fmt="appended")
+            if i == 2:
+                # split-part volume: shard the whole bytes into 12
+                # unpadded parts (numeric-sort trap)
+                with open(whole, "rb") as fh:
+                    blob = fh.read()
+                os.remove(whole)
+                sz = -(-len(blob) // 12)
+                for k in range(12):
+                    part = os.path.join(rdir, f"volume_2.vtu.{k}.part")
+                    with open(part, "wb") as fh:
+                        fh.write(blob[k * sz : (k + 1) * sz])
+            with open(os.path.join(rdir, f"force_mom_{i}.csv"), "w") as fh:
+                fh.write(f"cd\n{sum(w for _, w in mine)}\n")
 
+    base = build_once(_fixture_dir(sf_dir, "dsl"), build)
     t = read_drivaerml(spark, base, mesh_type="volume")
     meta = read_run_metadata(spark, base, kind="force_mom")
     attached = attach_global_data(t["points"], meta)
@@ -6931,15 +6829,7 @@ def q_openradioss_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from physicsnemo_curator_spark.sources.openradioss import read_openradioss
     from physicsnemo_curator_spark.sources.vtk_xml import write_vtu
 
-    base = _fixture_dir(sf_dir, "orad")
-    expected = [
-        os.path.join(base, f"run{run}", f"ts{t}.vtu")
-        for run in range(2)
-        for t in range(3)
-    ]
-    if _fixtures_ready(*expected):
-        docs = []  # warm path: every timestep file is already published
-    else:
+    def build(root: str) -> None:
         docs = sorted(
             (
                 (r["doc_id"], r["n_chars"])
@@ -6949,30 +6839,28 @@ def q_openradioss_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .collect()
             )
         )
-    for run in range(2) if docs else ():
-        mine = [(d, w) for d, w in docs if d % 2 == run]
-        if len(mine) < 4:
-            raise ValueError(
-                f"q_openradioss_scan fixture needs >= 4 documents with "
-                f"doc_id % 2 == {run} under doc_id < 100 — the driver "
-                "gate requires the standard testdata documents table"
-            )
-        rdir = os.path.join(base, f"run{run}")
-        os.makedirs(rdir, exist_ok=True)
-        n = len(mine)
-        cells = [[1, i, i + 1] for i in range(2, n)]
-        for t in range(3):
-            pts = [(1000.0 + run + t, 0.0, 0.0)] + [
-                (float(d + t * (w % 5)), float((d * 7) % 13), float((d * 3) % 5))
-                for d, w in mine
-            ]
-            _publish(
-                os.path.join(rdir, f"ts{t}.vtu"),
-                lambda p, pts=pts, cells=cells: write_vtu(
-                    pts, cells, None, {}, p, fmt="appended"
-                ),
-            )
+        for run in range(2):
+            mine = [(d, w) for d, w in docs if d % 2 == run]
+            if len(mine) < 4:
+                raise ValueError(
+                    f"q_openradioss_scan fixture needs >= 4 documents with "
+                    f"doc_id % 2 == {run} under doc_id < 100 — the correctness "
+                    "gate requires the standard testdata documents table"
+                )
+            rdir = os.path.join(root, f"run{run}")
+            os.makedirs(rdir)
+            cells = [[1, i, i + 1] for i in range(2, len(mine))]
+            for t in range(3):
+                pts = [(1000.0 + run + t, 0.0, 0.0)] + [
+                    (float(d + t * (w % 5)), float((d * 7) % 13), float((d * 3) % 5))
+                    for d, w in mine
+                ]
+                write_vtu(
+                    pts, cells, None, {}, os.path.join(rdir, f"ts{t}.vtu"),
+                    fmt="appended",
+                )
 
+    base = build_once(_fixture_dir(sf_dir, "orad"), build)
     t = read_openradioss(spark, base, vtk_glob="*.vtu")
     pts_agg = t["points"].groupBy("mesh_id").agg(
         F.count("*").alias("n_points"),
@@ -7070,7 +6958,7 @@ def q_zarr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             "q_zarr_roundtrip needs contiguous doc_id 0..239 (a missing "
             "site would leave a NaN hole in the dense lattice) — the "
-            "driver gate requires the standard testdata documents table"
+            "correctness gate requires the standard testdata documents table"
         )
     grid = docs.select(
         F.concat(F.lit("v"), F.col("doc_id") % 3).alias("variable"),
@@ -7215,7 +7103,7 @@ def q_netcdf3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             "q_netcdf3_roundtrip needs contiguous doc_id 0..199 (a "
             "missing site would leave a NaN hole in the dense lattice) "
-            "— the driver gate requires the standard testdata documents "
+            "— the correctness gate requires the standard testdata documents "
             "table"
         )
     grid = docs.select(
@@ -7358,13 +7246,7 @@ def q_d3plot_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_d3plot,
     )
 
-    base = _fixture_dir(sf_dir, "d3p")
-    expected = [os.path.join(base, f"d3plot_m{m}") for m in range(3)] + [
-        os.path.join(base, "model.k")
-    ]
-    if _fixtures_ready(*expected):
-        docs = []  # warm path: every fixture file is already published
-    else:
+    def build(root: str) -> None:
         docs = sorted(
             (
                 (r["doc_id"], r["n_chars"])
@@ -7374,47 +7256,44 @@ def q_d3plot_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .collect()
             )
         )
-    for m in range(3) if docs else ():
-        mine = [(d, w) for d, w in docs if d % 3 == m]
-        if len(mine) < 3:
-            raise ValueError(
-                f"q_d3plot_scan fixture needs >= 3 documents with doc_id "
-                f"% 3 == {m} under doc_id < 120; this sf dir has "
-                f"{len(mine)} — the driver gate requires the standard "
-                "testdata documents table"
-            )
-        coords = [
-            (float(d), float((d * 7) % 13), float((d * 3) % 5))
-            for d, _ in mine
-        ]
-        n = len(coords)
-        shells = [[0, i, i + 1, i + 1] for i in range(1, n - 1)]
-        parts = [1 + (e % 3) for e in range(len(shells))]
-        states = []
-        for s in range(2):
-            pos = [
-                (float(d + s * (w % 7)), float((d * 7) % 13), float((d * 3) % 5))
-                for d, w in mine
+        for m in range(3):
+            mine = [(d, w) for d, w in docs if d % 3 == m]
+            if len(mine) < 3:
+                raise ValueError(
+                    f"q_d3plot_scan fixture needs >= 3 documents with doc_id "
+                    f"% 3 == {m} under doc_id < 120; this sf dir has "
+                    f"{len(mine)} — the correctness gate requires the standard "
+                    "testdata documents table"
+                )
+            coords = [
+                (float(d), float((d * 7) % 13), float((d * 3) % 5))
+                for d, _ in mine
             ]
-            states.append((0.5 * s, pos))
-        _publish(
-            os.path.join(base, f"d3plot_m{m}"),
-            lambda t, coords=coords, shells=shells, parts=parts,
-            states=states: write_d3plot(coords, shells, parts, states, t),
-        )
-    kpath = os.path.join(base, "model.k")
-    _publish(
-        kpath,
-        lambda t: open(t, "w").write(
-            "$ pcs fixture keyword file\n"
-            + "".join(
-                f"*PART\npart {p}\n{p},{p + 10}\n"
-                f"*SECTION_SHELL\n{p + 10},2\n{(10 + p) / 4.0},0,0,0\n"
-                for p in (1, 2, 3)
+            shells = [[0, i, i + 1, i + 1] for i in range(1, len(coords) - 1)]
+            parts = [1 + (e % 3) for e in range(len(shells))]
+            states = []
+            for s in range(2):
+                pos = [
+                    (float(d + s * (w % 7)), float((d * 7) % 13), float((d * 3) % 5))
+                    for d, w in mine
+                ]
+                states.append((0.5 * s, pos))
+            write_d3plot(
+                coords, shells, parts, states,
+                os.path.join(root, f"d3plot_m{m}"),
             )
-        ),
-    )
+        with open(os.path.join(root, "model.k"), "w") as fh:
+            fh.write(
+                "$ pcs fixture keyword file\n"
+                + "".join(
+                    f"*PART\npart {p}\n{p},{p + 10}\n"
+                    f"*SECTION_SHELL\n{p + 10},2\n{(10 + p) / 4.0},0,0,0\n"
+                    for p in (1, 2, 3)
+                )
+            )
 
+    base = build_once(_fixture_dir(sf_dir, "d3p"), build)
+    kpath = os.path.join(base, "model.k")
     t = read_d3plot(spark, base)
     thick_map = parse_k_file(open(kpath).read())
     tdf = spark.createDataFrame(
@@ -7506,6 +7385,52 @@ FROM k ORDER BY mesh_id
 """
 
 
+def _aselmdb_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """The three ``.aselmdb`` shards q_aselmdb_scan and q_atomic_stats
+    both scan (one shared fixture directory).  Shard ``s`` holds one
+    system per document with ``doc_id % 3 == s`` in doc_id order."""
+    from physicsnemo_curator_spark.sources.aselmdb import write_aselmdb
+
+    def build(root: str) -> None:
+        docs = sorted(
+            (
+                (r["doc_id"], r["n_chars"])
+                for r in _t(spark, sf_dir, "documents")
+                .filter(F.col("doc_id") < 120)
+                .select("doc_id", "n_chars")
+                .collect()
+            )
+        )
+        for s in range(3):
+            mine = [(d, w) for d, w in docs if d % 3 == s]
+            if not mine:
+                raise ValueError(
+                    f"the aselmdb fixture needs >= 1 document with doc_id "
+                    f"% 3 == {s} under doc_id < 120 — the correctness gate "
+                    "requires the standard testdata documents table"
+                )
+            rows = []
+            for d, w in mine:
+                na = 2 + d % 4
+                rows.append(
+                    {
+                        "numbers": [1 + (d + j) % 8 for j in range(na)],
+                        "positions": [
+                            [float(d + j), float((d * 7) % 13), float(j)]
+                            for j in range(na)
+                        ],
+                        "energy": -(w % 50) / 2.0,
+                        "forces": [
+                            [float(j), 0.0, float(w % 3)] for j in range(na)
+                        ],
+                        "pbc": [d % 2 == 0] * 3,
+                    }
+                )
+            write_aselmdb(os.path.join(root, f"shard{s}.aselmdb"), rows)
+
+    return build_once(_fixture_dir(sf_dir, "aselmdb"), build)
+
+
 def q_aselmdb_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASE-LMDB binary-codec gate (sources/aselmdb.py — pure-Python
     LMDB B-tree walker + ``__ndarray__`` row decode, previously
@@ -7526,55 +7451,9 @@ def q_aselmdb_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from physicsnemo_curator_spark.sources.aselmdb import (
         read_aselmdb,
         to_atomic_tables,
-        write_aselmdb,
     )
 
-    base = _fixture_dir(sf_dir, "aselmdb")
-    expected = [
-        os.path.join(base, f"shard{s}.aselmdb") for s in range(3)
-    ]
-    if _fixtures_ready(*expected):
-        docs = []  # warm path: every shard is already published
-    else:
-        docs = sorted(
-            (
-                (r["doc_id"], r["n_chars"])
-                for r in _t(spark, sf_dir, "documents")
-                .filter(F.col("doc_id") < 120)
-                .select("doc_id", "n_chars")
-                .collect()
-            )
-        )
-    for s in range(3) if docs else ():
-        mine = [(d, w) for d, w in docs if d % 3 == s]
-        if not mine:
-            raise ValueError(
-                f"q_aselmdb_scan fixture needs >= 1 document with doc_id "
-                f"% 3 == {s} under doc_id < 120 — the driver gate "
-                "requires the standard testdata documents table"
-            )
-        rows = []
-        for d, w in mine:
-            na = 2 + d % 4
-            rows.append(
-                {
-                    "numbers": [1 + (d + j) % 8 for j in range(na)],
-                    "positions": [
-                        [float(d + j), float((d * 7) % 13), float(j)]
-                        for j in range(na)
-                    ],
-                    "energy": -(w % 50) / 2.0,
-                    "forces": [
-                        [float(j), 0.0, float(w % 3)] for j in range(na)
-                    ],
-                    "pbc": [d % 2 == 0] * 3,
-                }
-            )
-        _publish(
-            os.path.join(base, f"shard{s}.aselmdb"),
-            lambda t, rows=rows: write_aselmdb(t, rows),
-        )
-
+    base = _aselmdb_fixture(spark, sf_dir)
     structs = read_aselmdb(spark, base, pattern="shard*.aselmdb")
     systems, atoms = to_atomic_tables(structs)
     sysk = systems.withColumn(
@@ -7653,52 +7532,49 @@ def q_grid_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_grid_federated,
     )
 
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 240)
-        .select("doc_id", "n_chars")
-    )
-    if docs.count() != 240:
-        raise ValueError(
-            "q_grid_federated needs contiguous doc_id 0..239 (a missing "
-            "site would leave a NaN hole in the dense lattice) — the "
-            "driver gate requires the standard testdata documents table"
+    def build(root: str) -> None:
+        docs = (
+            _t(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 240)
+            .select("doc_id", "n_chars")
         )
-    lattice = docs.select(
-        F.concat(F.lit("v"), F.col("doc_id") % 3).alias("variable"),
-        (F.col("doc_id") / 3).cast("int").alias("r"),
-        F.col("n_chars").cast("double").alias("value"),
-    ).select(
-        "variable",
-        (F.col("r") / 10).cast("int").alias("time_idx"),
-        ((F.col("r") % 10) / 5).cast("int").cast("double").alias("lat"),
-        (F.col("r") % 5).cast("double").alias("lon"),
-        "value",
-    )
-    base = _fixture_dir(sf_dir, "gridfed")
-    alpha = os.path.join(base, "alpha")
-    beta = os.path.join(base, "beta")
-    # fixture stores publish ONCE per source identity (the _publish
-    # discipline of the other scan gates): the gate under test is the
-    # federated ROUTING read — rewriting both zarr stores on every run
-    # re-benched the sink q_zarr_roundtrip already gates
-    _publish_tree(
-        alpha,
-        lambda t: write_grid_zarr(
-            lattice.filter(F.col("variable").isin("v0", "v1")), t
-        ),
-    )
-    _publish_tree(
-        beta,
-        lambda t: write_grid_zarr(
+        if docs.count() != 240:
+            raise ValueError(
+                "q_grid_federated needs contiguous doc_id 0..239 (a missing "
+                "site would leave a NaN hole in the dense lattice) — the "
+                "correctness gate requires the standard testdata documents table"
+            )
+        lattice = docs.select(
+            F.concat(F.lit("v"), F.col("doc_id") % 3).alias("variable"),
+            (F.col("doc_id") / 3).cast("int").alias("r"),
+            F.col("n_chars").cast("double").alias("value"),
+        ).select(
+            "variable",
+            (F.col("r") / 10).cast("int").alias("time_idx"),
+            ((F.col("r") % 10) / 5).cast("int").cast("double").alias("lat"),
+            (F.col("r") % 5).cast("double").alias("lon"),
+            "value",
+        )
+        write_grid_zarr(
+            lattice.filter(F.col("variable").isin("v0", "v1")),
+            os.path.join(root, "alpha"),
+        )
+        write_grid_zarr(
             lattice.filter(F.col("variable") == "v2").unionByName(
                 lattice.filter(F.col("variable") == "v1").withColumn(
                     "value", F.col("value") + 1000.0
                 )
             ),
-            t,
-        ),
-    )
+            os.path.join(root, "beta"),
+        )
+
+    # the fixture stores are built ONCE per source identity: the gate
+    # under test is the federated ROUTING read — rewriting both zarr
+    # stores on every run re-benched the sink q_zarr_roundtrip already
+    # gates
+    base = build_once(_fixture_dir(sf_dir, "gridfed"), build)
+    alpha = os.path.join(base, "alpha")
+    beta = os.path.join(base, "beta")
     import warnings
 
     backends = [
@@ -7770,7 +7646,7 @@ def q_grid_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             "q_grid_sidecar needs contiguous doc_id 0..179 (a missing "
             "site would leave a NaN hole in the dense lattice) — the "
-            "driver gate requires the standard testdata documents table"
+            "correctness gate requires the standard testdata documents table"
         )
     idx = docs.select(
         F.concat(F.lit("g"), F.col("doc_id") % 2).alias("grid_id"),
@@ -7878,7 +7754,7 @@ def q_atomic_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference ``domains/atm/filters/stats.py:273-777`` level-keyed
     Welford stats and the AtomicDataZarrSink offset pre-allocation,
     ``domains/atm/sinks/zarr_writer.py:209+``): the q_aselmdb_scan
-    LMDB shards (SHARED fixture — same ``_fixture_dir`` key) scan
+    LMDB shards (the shared :func:`_aselmdb_fixture`) scan
     through ``to_atomic_tables``, then one moment-stats row per
     (level, field) — node/z, system/energy, system/natoms — plus a
     ``pack/offset`` row over the ragged-packing exclusive prefix sum
@@ -7890,55 +7766,9 @@ def q_atomic_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from physicsnemo_curator_spark.sources.aselmdb import (
         read_aselmdb,
         to_atomic_tables,
-        write_aselmdb,
     )
 
-    base = _fixture_dir(sf_dir, "aselmdb")
-    expected = [
-        os.path.join(base, f"shard{s}.aselmdb") for s in range(3)
-    ]
-    if _fixtures_ready(*expected):
-        docs = []  # warm path: the q_aselmdb_scan shards are published
-    else:
-        docs = sorted(
-            (
-                (r["doc_id"], r["n_chars"])
-                for r in _t(spark, sf_dir, "documents")
-                .filter(F.col("doc_id") < 120)
-                .select("doc_id", "n_chars")
-                .collect()
-            )
-        )
-    for s in range(3) if docs else ():
-        mine = [(d, w) for d, w in docs if d % 3 == s]
-        if not mine:
-            raise ValueError(
-                f"q_atomic_stats fixture needs >= 1 document with doc_id "
-                f"% 3 == {s} under doc_id < 120 — the driver gate "
-                "requires the standard testdata documents table"
-            )
-        rows = []
-        for d, w in mine:
-            na = 2 + d % 4
-            rows.append(
-                {
-                    "numbers": [1 + (d + j) % 8 for j in range(na)],
-                    "positions": [
-                        [float(d + j), float((d * 7) % 13), float(j)]
-                        for j in range(na)
-                    ],
-                    "energy": -(w % 50) / 2.0,
-                    "forces": [
-                        [float(j), 0.0, float(w % 3)] for j in range(na)
-                    ],
-                    "pbc": [d % 2 == 0] * 3,
-                }
-            )
-        _publish(
-            os.path.join(base, f"shard{s}.aselmdb"),
-            lambda t, rows=rows: write_aselmdb(t, rows),
-        )
-
+    base = _aselmdb_fixture(spark, sf_dir)
     structs = read_aselmdb(spark, base, pattern="shard*.aselmdb")
     systems, atoms = to_atomic_tables(structs)
     levels = atomic_level_stats(

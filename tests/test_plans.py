@@ -276,56 +276,3 @@ def test_r12_retrieval_family_plan_shapes(spark, sf_dir):
     # contributes none
     assert rrf.count("Scan parquet") == 4
     assert "CartesianProduct" not in rrf
-
-
-def test_publish_tree_writes_once_and_heals_unmarked(tmp_path):
-    """r15 wave 5: q_grid_federated's zarr fixture stores publish ONCE
-    per source identity (atomic rename + .published marker).  The
-    marker — not bare directory existence — gates the skip, so an
-    in-place store from before the discipline is rebuilt exactly
-    once."""
-    import os
-
-    from physicsnemo_curator_spark.plans.queries import _publish_tree
-
-    target = str(tmp_path / "store")
-    calls = []
-
-    def write(tmp):
-        calls.append(tmp)
-        os.makedirs(tmp)
-        with open(os.path.join(tmp, "payload"), "w") as fh:
-            fh.write(f"gen{len(calls)}")
-
-    _publish_tree(target, write)
-    assert open(os.path.join(target, "payload")).read() == "gen1"
-    assert os.path.exists(target + ".published")
-
-    # marker present: the writer must not run again
-    _publish_tree(target, write)
-    assert len(calls) == 1
-    assert open(os.path.join(target, "payload")).read() == "gen1"
-
-    # pre-discipline in-place store (no marker): rebuilt once
-    os.remove(target + ".published")
-    with open(os.path.join(target, "stale"), "w") as fh:
-        fh.write("x")
-    _publish_tree(target, write)
-    assert len(calls) == 2
-    assert open(os.path.join(target, "payload")).read() == "gen2"
-    assert not os.path.exists(os.path.join(target, "stale"))
-    assert os.path.exists(target + ".published")
-
-
-def test_fixtures_ready_requires_every_target(tmp_path):
-    """r15 wave 6: the scan gates skip their fixture-builder collect
-    only when EVERY expected fixture file exists — a partial set (torn
-    earlier process) must fall back to the cold build path, whose
-    per-file _publish fills exactly the missing files."""
-    from physicsnemo_curator_spark.plans.queries import _fixtures_ready
-
-    a, b = tmp_path / "a", tmp_path / "b"
-    a.write_text("x")
-    assert not _fixtures_ready(str(a), str(b))
-    b.write_text("y")
-    assert _fixtures_ready(str(a), str(b))
