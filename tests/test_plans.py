@@ -276,3 +276,70 @@ def test_r12_retrieval_family_plan_shapes(spark, sf_dir):
     # contributes none
     assert rrf.count("Scan parquet") == 4
     assert "CartesianProduct" not in rrf
+
+
+def test_publish_tree_writes_once_and_heals_unmarked(tmp_path):
+    """A fixture store is published ONCE per path: the completion
+    marker — not bare directory existence — gates the skip, so an
+    in-place store written without the marker is rebuilt exactly once
+    and loses its stale files."""
+    import os
+
+    from physicsnemo_curator_spark.core import session_cache
+
+    target = str(tmp_path / "store")
+    marker = os.path.join(target, session_cache.MARKER)
+    calls = []
+
+    def write(tmp):
+        calls.append(tmp)
+        with open(os.path.join(tmp, "payload"), "w") as fh:
+            fh.write(f"gen{len(calls)}")
+
+    session_cache.build_once(target, write)
+    assert open(os.path.join(target, "payload")).read() == "gen1"
+    assert os.path.exists(marker)
+
+    # marker present: the writer must not run again
+    session_cache.build_once(target, write)
+    assert len(calls) == 1
+    assert open(os.path.join(target, "payload")).read() == "gen1"
+
+    # in-place store without a marker: rebuilt once
+    os.remove(marker)
+    with open(os.path.join(target, "stale"), "w") as fh:
+        fh.write("x")
+    session_cache.build_once(target, write)
+    assert len(calls) == 2
+    assert open(os.path.join(target, "payload")).read() == "gen2"
+    assert not os.path.exists(os.path.join(target, "stale"))
+    assert os.path.exists(marker)
+
+
+def test_fixtures_ready_requires_every_target(tmp_path):
+    """A scan gate's fixture counts as complete only when its build
+    finished: a partial file set left by a torn earlier process is not
+    ready, and the next build_once writes every expected file."""
+    import os
+
+    from physicsnemo_curator_spark.core import session_cache
+
+    store = tmp_path / "fixtures"
+    store.mkdir()
+    (store / "a").write_text("x")
+    calls = []
+
+    def build(tmp):
+        calls.append(tmp)
+        for name, text in (("a", "x"), ("b", "y")):
+            with open(os.path.join(tmp, name), "w") as fh:
+                fh.write(text)
+
+    assert not (store / session_cache.MARKER).exists()
+    session_cache.build_once(str(store), build)
+    assert len(calls) == 1, "a partial set must fall back to the build"
+    assert (store / "a").read_text() == "x"
+    assert (store / "b").read_text() == "y"
+    assert (store / session_cache.MARKER).exists()
+    session_cache.build_once(str(store), build)
+    assert len(calls) == 1
